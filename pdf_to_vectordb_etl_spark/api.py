@@ -113,8 +113,18 @@ def process_folder(
     questions in one distributed plan, load them into the vector
     collection, and return the per-(year, subject) stats frame.
 
+    Each file is decoded exactly once: the page frame is persisted and
+    forced before extraction, so the test branch and the answer-key
+    branch of :func:`etl.extract_questions` both read the same decoded
+    pages. The question frame is persisted too and shared by the sink
+    write and the stats report, so the report describes exactly the
+    rows that were written. The report is collected (one row per
+    (year, subject)) and returned as a local DataFrame; both persisted
+    frames are released before the call returns, on error as well.
+
     Raises on the reference's error paths instead of returning False:
-    odd/too-few PDF counts (A5) and unpaired tests (J1)."""
+    odd/too-few PDF counts (A5) and unpaired tests (J1), both before
+    any file is decoded."""
     files = pdfsource.with_filename_tokens(pdfsource.scan_pdf_folder(spark, folder))
     parity = aggregates.folder_parity_check(files).first()
     if not (parity["enough"] and parity["even"]):
@@ -128,10 +138,22 @@ def process_folder(
 
     pages = pdfsource.pages_from_pdfs(
         files, decoder=decoder or pdfsource.real_pdf_decoder
-    )
-    questions = etl.extract_questions(pages)
-    load.load_questions(questions, collection_path, dim=dim, embed_fn=embed_fn)
-    return etl.extraction_report(questions)
+    ).persist()
+    questions = None
+    try:
+        pages.count()
+        questions = etl.extract_questions(pages).persist()
+        load.load_questions(questions, collection_path, dim=dim, embed_fn=embed_fn)
+        report = etl.extraction_report(questions)
+        # from Arrow, the frame is a LocalRelation that collects without
+        # a job; from a list of Rows it would be a parallelized RDD
+        return spark.createDataFrame(report.toArrow(), report.schema)
+    finally:
+        # dependents first: uncaching the pages would re-plan the
+        # cached questions against an uncached scan
+        if questions is not None:
+            questions.unpersist()
+        pages.unpersist()
 
 
 def file_to_vector_table(

@@ -65,6 +65,36 @@ def _unpersist_rdds(sc, ids) -> None:
             opt.get().unpersist(False)
 
 
+def _partition_sizes(local: DataFrame, counter_col: str) -> list:
+    """One row per partition of a frame numbered by the rank primitives,
+    in partition order: ``_pid``, its row count ``_n`` and the top
+    ``_top`` of its 1-based per-partition ``counter_col``."""
+    return (
+        local.groupBy("_pid")
+        .agg(F.count("*").alias("_n"), F.max(counter_col).alias("_top"))
+        .orderBy("_pid")
+        .collect()
+    )
+
+
+def _partition_offsets(sizes: list) -> tuple[dict, int]:
+    """(pid -> count of the rows in the partitions before it, total row
+    count) from :func:`_partition_sizes`. The per-partition counter is
+    the low 33 bits of ``monotonically_increasing_id``: a partition of
+    more than 2**33 rows wraps it and would repeat numbers silently, so
+    a counter top that differs from the row count raises."""
+    offset, offsets = 0, {}
+    for r in sizes:
+        if r["_top"] != r["_n"]:
+            raise RuntimeError(
+                f"partition {r['_pid']} numbered {r['_n']} rows up to "
+                f"{r['_top']}: the 33-bit per-partition row counter wrapped"
+            )
+        offsets[r["_pid"]] = offset
+        offset += r["_n"]
+    return offsets, offset
+
+
 def global_dense_rank(
     df: DataFrame, key_cols: list[str], out_col: str = "_rk"
 ) -> DataFrame:
@@ -104,20 +134,11 @@ def global_dense_rank(
         ).alias("_lrk"),
     )
     local = local.localCheckpoint(eager=True)
-    sizes = (
-        local.groupBy("_pid")
-        .agg(F.max("_lrk").alias("_n"))
-        .orderBy("_pid")
-        .collect()
-    )
-    if not sizes:
+    offsets, _ = _partition_offsets(_partition_sizes(local, "_lrk"))
+    if not offsets:
         # empty key set (e.g. a corpus of empty documents): create_map
         # with zero args types as map<void,void> and breaks resolution
         return df.withColumn(out_col, F.lit(None).cast("long")).limit(0)
-    offset, offsets = 0, {}
-    for r in sizes:
-        offsets[r["_pid"]] = offset
-        offset += r["_n"]
     omap = F.create_map(
         *[F.lit(x) for kv in offsets.items() for x in kv]
     )
@@ -477,13 +498,7 @@ def _row_numbered(
         F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1) + 1,
     )
     local = local.localCheckpoint(eager=True)
-    sizes = (
-        local.groupBy("_pid").agg(F.count("*").alias("_n")).orderBy("_pid").collect()
-    )
-    offset, offsets = 0, {}
-    for r in sizes:
-        offsets[r["_pid"]] = offset
-        offset += r["_n"]
+    offsets, offset = _partition_offsets(_partition_sizes(local, "_lrn"))
     if not offsets:
         return (
             local.withColumn(out_col, F.lit(None).cast("long")).drop(

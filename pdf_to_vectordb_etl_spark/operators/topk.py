@@ -1135,7 +1135,10 @@ def _beam_probe_bsp(
 
     Returns the visited (qid, cand, dist) DataFrame, or ``None`` when
     the artifact exceeds the caps or under ``SPARK_GRAFT_NN_BSP=0``
-    (the join cascade then runs and stays gate-exercised)."""
+    (the join cascade then runs and stays gate-exercised). The result
+    is materialized (eager local checkpoint) and the broadcast artifact
+    destroyed before returning, so repeated serving calls in one
+    session do not accumulate index copies in the block managers."""
     import os as _os
 
     if _os.environ.get("SPARK_GRAFT_NN_BSP", "1") == "0":
@@ -1208,9 +1211,16 @@ def _beam_probe_bsp(
     pv = probes.select(
         F.col(id_col).alias("qid"), _quantize_micro(vec_col).alias("pq")
     )
-    return pv.mapInPandas(
-        _run, "qid bigint, cand bigint, dist bigint"
-    ).dropDuplicates(["qid", "cand"])
+    visited = (
+        pv.mapInPandas(_run, "qid bigint, cand bigint, dist bigint")
+        .dropDuplicates(["qid", "cand"])
+        .localCheckpoint(eager=True)
+    )
+    # the checkpoint cut the lineage to the broadcast, so nothing reads
+    # it again: free the artifact on the driver and the executors now,
+    # not whenever garbage collection gets to it
+    bc.destroy(blocking=True)
+    return visited
 
 
 def nn_descent_beam_probe(

@@ -12,8 +12,20 @@ from pyspark.sql import functions as F
 
 from pdf_to_vectordb_etl_spark import api, sinks
 from pdf_to_vectordb_etl_spark.operators import aggregates
-from pdf_to_vectordb_etl_spark.plans import etl
+from pdf_to_vectordb_etl_spark.plans import etl, load
 from pdf_to_vectordb_etl_spark.sources import synthetic
+
+
+def counting_decoder(calls):
+    """``synthetic_pdf_decoder`` that adds 1 to the Spark accumulator
+    ``calls`` per decoded file. A closure, so executors receive it by
+    value: this test module is not importable on the workers."""
+
+    def decode(path: str, content: bytes) -> list[dict]:
+        calls.add(1)
+        return synthetic.synthetic_pdf_decoder(path, content)
+
+    return decode
 
 
 def _touch_corpus(tmp_path, names):
@@ -72,12 +84,17 @@ def test_extract_pdf_txt_and_dict_modes(spark, tmp_path):
         api.extract_pdf(spark, test_p, key_p, output_type="nope")
 
 
-def test_process_folder_end_to_end_and_error_paths(spark, tmp_path):
+def test_process_folder_end_to_end_and_error_paths(spark, tmp_path, monkeypatch):
     folder = _touch_corpus(tmp_path, PAIR_2022_D1 + PAIR_2022_D2)
     table = str(tmp_path / "collection")
-    report = api.process_folder(
-        spark, folder, table, dim=16, decoder=synthetic.synthetic_pdf_decoder
-    )
+    sc = spark.sparkContext
+    calls = sc.accumulator(0)
+    decoder = counting_decoder(calls)
+    persisted = sc._jsc.getPersistentRDDs().size()
+    report = api.process_folder(spark, folder, table, dim=16, decoder=decoder)
+    # one decode per file, and both materializations released on return
+    assert calls.value == 4
+    assert sc._jsc.getPersistentRDDs().size() == persisted
     want = aggregates.question_counts(
         etl.extract_questions(
             synthetic.corpus_df(spark, years=(2022,), days=("D1", "D2"))
@@ -87,26 +104,38 @@ def test_process_folder_end_to_end_and_error_paths(spark, tmp_path):
     exp = {(r["year"], r["subject"]): r["n"] for r in want.collect()}
     assert got == exp
     stored = sinks.read_embeddings_table(spark, table)
-    assert stored.count() == sum(exp.values())
+    assert stored.count() == sum(got.values())
 
-    # orphan test (PV without GB) -> all-or-nothing raises
+    # a failing sink still releases both materializations
+    def boom(*args, **kwargs):
+        raise RuntimeError("sink down")
+
+    with monkeypatch.context() as m:
+        m.setattr(load, "load_questions", boom)
+        with pytest.raises(RuntimeError, match="sink down"):
+            api.process_folder(
+                spark, folder, str(tmp_path / "c1"), dim=16, decoder=decoder
+            )
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+
+    # orphan test (PV without GB) -> all-or-nothing raises, before any decode
+    calls_before = calls.value
     orphan_dir = _touch_corpus(
         tmp_path / "o", PAIR_2022_D1 + ["2022_PV_impresso_D2_CD1.pdf",
                                         "2023_GB_impresso_D2_CD2.pdf"]
     )
     with pytest.raises(ValueError, match="answer key"):
         api.process_folder(
-            spark, orphan_dir, str(tmp_path / "c2"), dim=16,
-            decoder=synthetic.synthetic_pdf_decoder,
+            spark, orphan_dir, str(tmp_path / "c2"), dim=16, decoder=decoder
         )
 
-    # odd file count -> parity raises
+    # odd file count -> parity raises, before any decode
     odd_dir = _touch_corpus(tmp_path / "p", PAIR_2022_D1 + ["2022_PV_impresso_D2_CD1.pdf"])
     with pytest.raises(ValueError, match="even count"):
         api.process_folder(
-            spark, odd_dir, str(tmp_path / "c3"), dim=16,
-            decoder=synthetic.synthetic_pdf_decoder,
+            spark, odd_dir, str(tmp_path / "c3"), dim=16, decoder=decoder
         )
+    assert calls.value == calls_before
 
 
 def test_file_to_vector_table_and_search(spark, tmp_path):

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import load
@@ -224,3 +225,71 @@ def test_rank_primitive_range_exchange_is_size_aware(spark):
     assert nparts < int(
         spark.conf.get("spark.sql.shuffle.partitions")
     ) or nparts <= 2
+
+
+def test_rank_primitives_raise_on_wrapped_counter(spark, monkeypatch):
+    """A partition whose per-partition counter top differs from its row
+    count (what a wrapped 33-bit counter leaves) must raise in both rank
+    primitives instead of numbering rows twice."""
+    import pytest
+    from pyspark.sql import Row
+
+    from pdf_to_vectordb_etl_spark.operators import suffixes
+
+    wrapped = [Row(_pid=0, _n=5, _top=5), Row(_pid=1, _n=7, _top=3)]
+    monkeypatch.setattr(suffixes, "_partition_sizes", lambda local, col: wrapped)
+    df = spark.range(12).select(F.col("id").alias("v"))
+    with pytest.raises(RuntimeError, match="counter wrapped"):
+        suffixes._row_numbered(df, ["v"], "rn")
+    with pytest.raises(RuntimeError, match="counter wrapped"):
+        suffixes.global_dense_rank(df, ["v"], "rk")
+
+
+def _driver_broadcast_blocks(sc) -> int:
+    """Broadcast blocks held by the driver's block manager, leaving out
+    the per-stage task binaries (byte-array broadcasts Spark releases
+    on its own)."""
+    entries = (
+        sc._jvm.org.apache.spark.SparkEnv.get()
+        .blockManager()
+        .blockInfoManager()
+        .entries()
+    )
+    n = 0
+    while entries.hasNext():
+        entry = entries.next()  # scala (BlockId, BlockInfo)
+        if entry._1().isBroadcast() and entry._2().classTag().toString() != "Array[byte]":
+            n += 1
+    return n
+
+
+def test_bsp_serving_calls_release_their_broadcast(spark, sf_dir):
+    """Repeated hop-fused BSP probes in one session must not accumulate
+    broadcast copies of the index artifact on the driver."""
+    from pdf_to_vectordb_etl_spark.operators.topk import (
+        nn_descent_beam_probe,
+        nn_descent_graph,
+    )
+
+    emb = load(spark, sf_dir, "embeddings").filter(
+        F.col("embedding").isNotNull()
+    )
+    # checkpointed inputs: the serving calls below then plan no
+    # broadcast of their own besides the artifact
+    probes = emb.filter(F.col("vec_id") < 15).localCheckpoint()
+    corpus = emb.filter(
+        (F.col("vec_id") >= 15) & (F.col("vec_id") < 300)
+    ).localCheckpoint()
+    g = nn_descent_graph(corpus, k=5, rounds=3).localCheckpoint()
+
+    def serve() -> int:
+        return nn_descent_beam_probe(
+            g, corpus, probes, hops=4, beam=6, fast_path_max_nodes=None
+        ).count()
+
+    n = serve()
+    sc = spark.sparkContext
+    before = _driver_broadcast_blocks(sc)
+    for _ in range(5):
+        assert serve() == n
+    assert _driver_broadcast_blocks(sc) <= before

@@ -19,7 +19,9 @@ NN-descent family:
                        formulations stay comparable round over round.
 
 Writes one JSON line per mode to stdout and the combined record to
-``BENCH_DISTRIBUTED_<tag>.json`` in the repo root.
+``BENCH_DISTRIBUTED_<tag>.json`` in the repo root. A worker that exits
+non-zero or prints no record with a ``total`` stops the run with a
+non-zero exit and the worker's stderr tail; nothing is written.
 
 Usage: python tools/bench_distributed.py <tag>   (e.g. r11_before)
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -101,8 +103,16 @@ def run_mode(mode: str, extra_env: dict[str, str]) -> dict:
         capture_output=True, text=True,
     )
     sys.stderr.write(out.stderr[-2000:])
-    line = out.stdout.strip().splitlines()[-1] if out.stdout.strip() else "{}"
-    rec = json.loads(line)
+    lines = out.stdout.strip().splitlines()
+    try:
+        rec = json.loads(lines[-1]) if lines else {}
+    except json.JSONDecodeError:
+        rec = {}
+    if out.returncode != 0 or "total" not in rec:
+        sys.exit(
+            f"mode {mode}: worker exited {out.returncode} without a result "
+            "record (its stderr tail is above); nothing written"
+        )
     rec["mode"] = mode
     rec["env"] = extra_env
     return rec
